@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Ranked and boolean retrieval over an inverted index — the serving
   * side of a training-data pipeline (corpus search, eval-set mining,
@@ -123,7 +124,10 @@ object Retrieval {
                           dir: String): Seq[Long] = {
     val re = "v(\\d+)".r
     val st = try fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      catch { case _: java.io.FileNotFoundException => Array.empty }
+      catch {
+        case _: java.io.FileNotFoundException =>
+          Array.empty[org.apache.hadoop.fs.FileStatus]
+      }
     st.toSeq.filter(_.isDirectory).flatMap(_.getPath.getName match {
       case re(n) => Some(n.toLong)
       case _ => None
@@ -221,13 +225,69 @@ object Retrieval {
       sum(size(tok(col(textCol))).cast("long"))
         .cast("long").as("sum_tokens"))
 
-  /** Stored stats → the `(n_docs, avgdl)` shape the scorer consumes
-    * (one exact integer division as DOUBLE). */
-  def readStats(spark: org.apache.spark.sql.SparkSession,
-                dir: String): DataFrame =
-    spark.read.parquet(s"${root(spark, dir)}/stats")
-      .select(col("n_docs"),
-        (col("sum_tokens").cast("double") / col("n_docs")).as("avgdl"))
+  /** Stored stats → the `(n_docs, avgdl)` shape the scorer consumes,
+    * as a one-row LocalRelation (see [[Snapshot]]). */
+  def readStats(spark: SparkSession, dir: String): DataFrame =
+    new Snapshot(spark, dir).bm25Stats
+
+  /** One call's view of a persisted index. `CURRENT` is resolved once
+    * ([[root]]), so every table a serve reads comes from one version:
+    * a compaction flip between two reads can no longer mix versions.
+    * `stats` and `terms` are read with their fixed schemas; `postings`
+    * and `positions`, whose `doc_id` type is the build's id column,
+    * have theirs inferred at most once — every schemaless
+    * `spark.read.parquet` launches a footer-inference job. `tb` always
+    * reads as LONG, the bucket literals' type. The stats row is read
+    * once and the tombstones are checked once. Never kept across calls:
+    * [[appendIndex]] rewrites `stats` inside the live version. */
+  private final class Snapshot(spark: SparkSession, dir: String) {
+    val rt: String = root(spark, dir)
+    private val tables = scala.collection.mutable.Map.empty[String, DataFrame]
+    def table(sub: String): DataFrame = tables.getOrElseUpdate(sub, {
+      val path = s"$rt/$sub"
+      val schema = sub match {
+        case "stats" => StructType.fromDDL("n_docs LONG, sum_tokens LONG")
+        case "terms" => StructType.fromDDL("term STRING, df LONG, tb LONG")
+        case _ => StructType(spark.read.parquet(path).schema.map(f =>
+          if (f.name == "tb") f.copy(dataType = LongType) else f))
+      }
+      spark.read.schema(schema).parquet(path)
+    })
+    /** `(n_docs, sum_tokens)`, collected once into a LocalRelation. */
+    lazy val stats: DataFrame = localOf(table("stats"))
+    /** BM25's `(n_docs, avgdl)`: one exact integer division as DOUBLE. */
+    def bm25Stats: DataFrame = stats.select(col("n_docs"),
+      (col("sum_tokens").cast("double") / col("n_docs")).as("avgdl"))
+    /** QL/SDM's |C| = Σ tf: the stored `sum_tokens`, exact. */
+    def collTotal: DataFrame =
+      stats.select(col("sum_tokens").cast("double").as("c_total"))
+    /** `sub` filtered to `terms` by BOTH the static `tb` partition
+      * filter (file-level pruning; bucket ids from [[bucketOf]] on the
+      * driver, no job) and the term filter. */
+    def slice(sub: String, terms: Seq[String], nBuckets: Int): DataFrame =
+      table(sub)
+        .filter(col("tb").isInCollection(terms.map(bucketOf(_, nBuckets)).distinct) &&
+          col("term").isInCollection(terms))
+        .drop("tb")
+    /** Postings for `terms` with `df` attached from `dict`, a
+      * dictionary slice covering them (broadcast). */
+    def withDf(terms: Seq[String], nBuckets: Int,
+               dict: DataFrame): DataFrame =
+      slice("postings", terms, nBuckets).join(broadcast(dict), "term")
+    def indexSlice(terms: Seq[String], nBuckets: Int): DataFrame =
+      withDf(terms, nBuckets, slice("terms", terms, nBuckets))
+    private lazy val tombstones: Option[DataFrame] = {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        None
+      else Some(spark.read.schema("doc_id LONG").parquet(p.toString).distinct())
+    }
+    /** `df` minus tombstoned doc ids — the delete-visibility gate of
+      * every servable read. Tombstones are vastly smaller than any
+      * slice and broadcast. */
+    def servable(df: DataFrame): DataFrame = tombstones.fold(df)(t =>
+      df.join(broadcast(t), Seq("doc_id"), "left_anti"))
+  }
 
   /** Incrementally ADD documents to a stored index: new postings
     * APPEND into the `tb` partitions (old files untouched); the term
@@ -243,7 +303,8 @@ object Retrieval {
                   dir: String, nBuckets: Int,
                   tok: Column => Column = TextAnalysis.tokens): Unit = {
     val spark = newDocs.sparkSession
-    val rt = root(spark, dir)   // append mutates the CURRENT version
+    val snap = new Snapshot(spark, dir)
+    val rt = snap.rt            // append mutates the CURRENT version
     val newPosts = postings(newDocs, idCol, textCol, tok)
       .withColumn("tb", pmod(xxhash64(col("term")), lit(nBuckets)))
     newPosts.write.mode("append").partitionBy("tb")
@@ -263,16 +324,14 @@ object Retrieval {
     // append's two renames is repaired instead of failing the
     // `$rt/terms` read.
     Staged.heal(spark, rt, live = "terms")
-    spark.read.parquet(s"$rt/terms")
+    snap.table("terms")
       .unionByName(
         newPosts.groupBy("tb", "term").agg(count(lit(1)).as("df")))
       .groupBy("tb", "term").agg(sum("df").cast("long").as("df"))
       .write.mode("overwrite").partitionBy("tb")
       .parquet(Staged.staging(rt, "terms"))
     Staged.commit(spark, rt, None, live = "terms")
-    val old = spark.read.parquet(s"$rt/stats")
-      .select(col("n_docs").cast("long"), col("sum_tokens").cast("long"))
-      .head()
+    val old = snap.stats.head()
     val add = exactStats(newDocs, textCol, tok)
       .select(col("n_docs").cast("long"), col("sum_tokens").cast("long"))
       .head()
@@ -305,10 +364,11 @@ object Retrieval {
     * untouched — the dictionary, stats and tombstones are not
     * involved — so serving before and after is bit-identical.
     * Returns the bucket ids rewritten. */
-  def compactPostings(spark: org.apache.spark.sql.SparkSession,
+  def compactPostings(spark: SparkSession,
                       dir: String, maxFilesPerBucket: Int = 1): Seq[Long] = {
     import org.apache.hadoop.fs.Path
-    val rt = root(spark, dir)
+    val snap = new Snapshot(spark, dir)
+    val rt = snap.rt
     val postsRoot = new Path(s"$rt/postings")
     val fs = postsRoot
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -339,13 +399,13 @@ object Retrieval {
     if (frag.nonEmpty) {
       val tmp = new Path(s"$rt/.postings_compacting")
       fs.delete(tmp, true)
-      // explicit schema: partition-type inference would read tb as INT;
-      // declaring LONG keeps the partition column native so the isin
-      // filter prunes at the partition level (only fragmented buckets
-      // are read, let alone rewritten)
-      spark.read
-        .schema("doc_id LONG, term STRING, tf LONG, dl LONG, tb LONG")
-        .parquet(s"$rt/postings")
+      // the snapshot's inferred postings schema (doc_id keeps the
+      // build's id type) with tb as LONG: partition-type inference
+      // would read tb as INT, and the native LONG lets the isin filter
+      // prune at the partition level (only fragmented buckets are
+      // read, let alone rewritten). Read after the sweep above, so the
+      // file listing sees the restored buckets.
+      snap.table("postings")
         .filter(col("tb").isin(frag.map(_._1): _*))
         .repartition(col("tb"))
         .write.mode("overwrite").partitionBy("tb").parquet(tmp.toString)
@@ -369,18 +429,15 @@ object Retrieval {
   /** Serve-time slice of the stored index for a (tiny) term set,
     * df attached from the dictionary: the term-bucket literals make
     * BOTH partition filters STATIC, so only the files those buckets
-    * own are read. The bucket computation is a bounded collect over
-    * the query terms (the w25 centroid-literal discipline). */
-  def readIndexSlice(spark: org.apache.spark.sql.SparkSession, dir: String,
+    * own are read. The bucket ids are computed on the driver
+    * ([[bucketOf]]). */
+  def readIndexSlice(spark: SparkSession, dir: String,
                      terms: Seq[String], nBuckets: Int): DataFrame =
-    prunedRead(spark, dir, "postings", terms, nBuckets)
-      .join(broadcast(prunedRead(spark, dir, "terms", terms, nBuckets)),
-        "term")
+    new Snapshot(spark, dir).indexSlice(terms, nBuckets)
 
   /** Positions slice for a phrase/proximity serve from an index
     * written with `withPositions = true`: only the phrase terms'
-    * buckets are read (file-level pruning — the [[prunedRead]]
-    * discipline), and [[phraseOccurrences]] consumes the slice
+    * buckets are read, and [[phraseOccurrences]] consumes the slice
     * directly (the positional intersection only ever touches phrase
     * terms' rows, so the slice loses nothing). Tombstone-aware
     * (r18 verdict #1): deleted docs vanish from positional serves
@@ -388,47 +445,10 @@ object Retrieval {
     * postings — without this, a phrase serve between [[deleteDocs]]
     * and [[compactDeletes]] would resurface deleted docs (d148 pins
     * the lifecycle). */
-  def readPositionsSlice(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, terms: Seq[String],
-                         nBuckets: Int): DataFrame =
-    minusTombstones(spark, dir,
-      prunedRead(spark, dir, "positions", terms, nBuckets))
-
-  /** `df` minus tombstoned doc ids, when `$dir/tombstones` exists —
-    * the shared delete-visibility gate of [[readServableSlice]] and
-    * [[readPositionsSlice]]. Tombstones are vastly smaller than any
-    * slice and broadcast. */
-  private def minusTombstones(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, df: DataFrame): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")))
-      df
-    else
-      df.join(
-        broadcast(spark.read.parquet(s"$dir/tombstones").distinct()),
-        Seq("doc_id"), "left_anti")
-  }
-
-  /** One stored table (`postings` or `terms`) filtered to `terms`,
-    * with BOTH the static `tb` partition filter (file-level pruning)
-    * and the term filter applied. The bucket computation is a bounded
-    * collect over the query terms (the w25 centroid discipline). */
-  def prunedRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 sub: String, terms: Seq[String],
-                 nBuckets: Int): DataFrame = {
-    // Bucket ids computed ON THE DRIVER (round 20): the old
-    // `terms.toDS().select(pmod(xxhash64(…))).distinct().collect()`
-    // launched a real shuffle job (LocalRelation → 32-partition
-    // distinct) per pruned read — two per indexed serve, pure
-    // scheduling overhead for ≤ |query terms| rows. XxHash64Function
-    // with seed 42 IS functions.xxhash64 (spec-gated), so the
-    // literals are byte-identical to what writeIndex assigned.
-    val buckets = terms.map(bucketOf(_, nBuckets)).distinct
-    spark.read.parquet(s"${root(spark, dir)}/$sub")
-      .filter(col("tb").isInCollection(buckets) &&
-        col("term").isInCollection(terms))
-      .drop("tb")
+  def readPositionsSlice(spark: SparkSession, dir: String,
+                         terms: Seq[String], nBuckets: Int): DataFrame = {
+    val snap = new Snapshot(spark, dir)
+    snap.servable(snap.slice("positions", terms, nBuckets))
   }
 
   /** `pmod(xxhash64(term), nBuckets)` evaluated on the driver —
@@ -462,13 +482,13 @@ object Retrieval {
     * scorer's plan. On a memoized checkpoint or a pruned index read
     * the filter is also strictly cheaper: it drops the per-consumer
     * BroadcastExchange build the join paid. The collect is bounded
-    * by the query term set (the w25/w30 discipline). Row-set
-    * identical to the join: `termsOf` is distinct, and an In filter
-    * keeps exactly the rows an inner join against a distinct key set
-    * keeps. */
+    * by the query set (the w25/w30 discipline) and dedupes on the
+    * driver: a `distinct` job over a query LocalRelation cost a
+    * shuffle for a handful of rows. Row-set identical to the join:
+    * `termsOf` is distinct, and an In filter keeps exactly the rows
+    * an inner join against a distinct key set keeps. */
   private def termsOf(queries: DataFrame): Seq[String] =
-    queries.select("term").distinct()
-      .collect().map(_.getString(0)).toSeq
+    queries.select("term").collect().map(_.getString(0)).distinct.toSeq
   private def termSlice(posts: DataFrame, terms: Seq[String]): DataFrame =
     posts.filter(col("term").isInCollection(terms))
 
@@ -525,7 +545,8 @@ object Retrieval {
     * FileScan-dedup lesson, as for [[rm3TopK]]). */
   def qlDirichletTopK(posts: DataFrame, queries: DataFrame, k: Int,
                       mu: Double = 300.0): DataFrame = {
-    val qterms = queries.select(col("query_id"), col("term")).distinct()
+    val qterms = localOf(queries.select(col("query_id"), col("term")),
+      distinct = true)
     // |C| must stay a FULL-postings aggregate; only the slice narrows
     // to query terms (literal filter — pushes below the postings
     // aggregation on raw lineage, see [[termSlice]]).
@@ -557,20 +578,18 @@ object Retrieval {
     * throughout (|C| stale-high only deflates every p(t|C) by the
     * same factor), but callers needing exact QL mid-window should
     * compact first. */
-  def qlDirichletIndexedTopK(spark: org.apache.spark.sql.SparkSession,
+  def qlDirichletIndexedTopK(spark: SparkSession,
                              dir: String, queries: DataFrame, k: Int,
                              mu: Double = 300.0,
                              nBuckets: Int = 16): DataFrame = {
-    import spark.implicits._
-    val qterms = queries.select(col("query_id"), col("term")).distinct()
-    val termList = qterms.select("term").distinct()
-      .as[String].collect().toSeq            // bounded: the query set
-    val coll = spark.read.parquet(s"${root(spark, dir)}/stats")
-      .select(col("sum_tokens").cast("double").as("c_total"))
-    // readServablePostings, not readServableSlice (round 20): QL
-    // never reads df — see sdmIndexedTopK.
-    qlGather(readServablePostings(spark, dir, termList, nBuckets),
-      qterms, coll, mu, k)
+    val snap = new Snapshot(spark, dir)
+    val qterms = localOf(queries.select(col("query_id"), col("term")),
+      distinct = true)
+    // postings without the dictionary join (round 20): QL never reads
+    // df — see sdmIndexedTopK.
+    qlGather(
+      snap.servable(snap.slice("postings", termsOf(qterms), nBuckets)),
+      qterms, snap.collTotal, mu, k)
   }
 
   /** The Dirichlet-QL scoring tail shared by the batch and indexed
@@ -645,9 +664,10 @@ object Retrieval {
               k: Int, mu: Double = 300.0, window: Int = 8,
               lamT: Double = 0.85, lamO: Double = 0.1,
               lamU: Double = 0.05): DataFrame = {
+    val q = localOf(queries)                 // bounded: the query set
     val coll = posts.agg(sum(col("tf")).cast("double").as("c_total"))
-    val slice = termSlice(posts, termsOf(queries))
-    sdmGather(slice, coll, posPosts, queries, k, mu, window,
+    val slice = termSlice(posts, termsOf(q))
+    sdmGather(slice, coll, posPosts, q, k, mu, window,
       lamT, lamO, lamU)
   }
 
@@ -662,17 +682,15 @@ object Retrieval {
     * verbatim); the QL tombstone-staleness caveat applies unchanged
     * (cf fresh via the servable anti-join, |C| stored-stale until
     * compaction). */
-  def sdmIndexedTopK(spark: org.apache.spark.sql.SparkSession,
+  def sdmIndexedTopK(spark: SparkSession,
                      dir: String, queries: DataFrame, k: Int,
                      mu: Double = 300.0, window: Int = 8,
                      lamT: Double = 0.85, lamO: Double = 0.1,
                      lamU: Double = 0.05,
                      nBuckets: Int = 16): DataFrame = {
-    import spark.implicits._
-    val termList = queries.select("term").distinct()
-      .as[String].collect().toSeq            // bounded: the query set
-    val coll = spark.read.parquet(s"${root(spark, dir)}/stats")
-      .select(col("sum_tokens").cast("double").as("c_total"))
+    val snap = new Snapshot(spark, dir)
+    val q = localOf(queries)                 // bounded: the query set
+    val termList = termsOf(q)
     // Slices deliberately NOT materialized (round-19 measurement):
     // each extra consumer re-reads a term-PRUNED parquet slice — a
     // cheap, file-pruned subtree — and an eager localCheckpoint of
@@ -682,15 +700,16 @@ object Retrieval {
     // dedupes the identical tombstone anti-join broadcasts). The
     // d100 materialization lesson applies to re-TOKENIZING corpus
     // lineage, not to pruned index reads.
-    // readServablePostings, not readServableSlice (round 20): SDM
-    // never reads df, and the slice has THREE consumers in the plan —
-    // the dictionary join cost three pruned terms reads + broadcast
-    // builds per serve.
+    // Postings without the dictionary join (round 20): SDM never
+    // reads df, and the slice has THREE consumers in the plan — the
+    // join cost three pruned terms reads + broadcast builds per serve.
+    // Every posting's term is in the dictionary by writeIndex /
+    // appendIndex construction, so the rows are the same.
     sdmGather(
-      readServablePostings(spark, dir, termList, nBuckets),
-      coll,
-      readPositionsSlice(spark, dir, termList, nBuckets),
-      queries, k, mu, window, lamT, lamO, lamU)
+      snap.servable(snap.slice("postings", termList, nBuckets)),
+      snap.collTotal,
+      snap.servable(snap.slice("positions", termList, nBuckets)),
+      q, k, mu, window, lamT, lamO, lamU)
   }
 
   /** The SDM scoring core shared by the batch and indexed serves:
@@ -706,8 +725,17 @@ object Retrieval {
     val D = org.apache.spark.sql.types.DecimalType(28, 9)
     val qt = queries.select(col("query_id"),
       col("qpos").cast("long").as("qpos"), col("term"))
-    val uni = qt.select("query_id", "term").distinct()
-    val qtermList = termsOf(qt)
+    // The query-set planning state (unigrams, bigrams, term list) is
+    // built on the driver from ONE bounded collect and re-enters the
+    // plan as LocalRelations: `distinct` and self-join jobs over a
+    // handful of query rows cost a shuffle each.
+    val qtRows = qt.collect().toSeq
+    val (qidF, termF) = (qt.schema("query_id"), qt.schema("term"))
+    val (taF, tbF) = (termF.copy(name = "ta"), termF.copy(name = "tb"))
+    def rowsOf(rows: Seq[Row], fields: StructField*): DataFrame =
+      local(queries.sparkSession, rows.distinct, StructType(fields))
+    val uni = rowsOf(qtRows.map(r => Row(r.get(0), r.get(2))), qidF, termF)
+    val qtermList = qtRows.map(_.getString(2)).distinct
     val cfT = slice.groupBy("term")
       .agg(sum(col("tf")).cast("double").as("cf"))
     val cand = slice.join(broadcast(uni), "term")
@@ -736,14 +764,18 @@ object Retrieval {
       .groupBy("query_id", "doc_id")
       .agg(sum(col("contrib")).as("sT"))
     // ---- adjacent query bigrams; window counts per DISTINCT bigram
-    // (shared across queries — the d141 term-sharing discipline)
-    val bg = qt.as("x").join(qt.as("y"),
-        col("x.query_id") === col("y.query_id") &&
-          col("y.qpos") === col("x.qpos") + 1)
-      .select(col("x.query_id").as("query_id"),
-        col("x.term").as("ta"), col("y.term").as("tb"))
-      .distinct()
-    val bgd = bg.select("ta", "tb").distinct()
+    // (shared across queries — the d141 term-sharing discipline). The
+    // self-join `x.query_id = y.query_id AND y.qpos = x.qpos + 1` runs
+    // on the driver: a null query_id or qpos matches nothing, and
+    // repeated (query, qpos) rows pair up as the join's product would.
+    val byPos = qtRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .groupBy(r => (r.get(0), r.getLong(1)))
+    val bgRows: Seq[Row] = byPos.toSeq.flatMap { case ((q, p), xs) =>
+      byPos.getOrElse((q, p + 1), Seq.empty[Row])
+        .flatMap(y => xs.map(x => Row(q, x.get(2), y.get(2))))
+    }
+    val bg = rowsOf(bgRows, qidF, taF, tbF)
+    val bgd = rowsOf(bgRows.map(r => Row(r.get(1), r.get(2))), taF, tbF)
     val ps = termSlice(posPosts, qtermList)
     // Materialized: BOTH families' cf aggregations and doc-joins read
     // it (4 consumers) — left as lineage the position join re-runs
@@ -881,7 +913,7 @@ object Retrieval {
     val spark = posts.sparkSession
     // one row; raw corpusStats lineage would re-run its corpus
     // tokenize in BOTH the stage-1 feedback job and the final plan
-    val stats = statsLocal(stats0)
+    val stats = localOf(stats0)
     val orig = queries.select(col("query_id"), col("term")).distinct()
     // Feedback set collected ONCE (round 20, verdict r19 #5 — it was
     // a localCheckpoint job + a separate doc-id collect, two
@@ -1059,11 +1091,12 @@ object Retrieval {
     // candidates via the SERVABLE slice (r18 verdict #1): a deleted
     // doc must not be nominated between deleteDocs and compaction —
     // identical to readIndexSlice when no tombstones exist.
+    val snap = new Snapshot(spark, dir)
     val cand = bm25TopKIndexed(
-      readServableSlice(spark, dir, terms, nBuckets), queries,
-      readStats(spark, dir), kCand)
+      snap.servable(snap.indexSlice(terms, nBuckets)), queries,
+      snap.bm25Stats, kCand)
     proximityRescore(cand,
-      readPositionsSlice(spark, dir, terms, nBuckets), queries, k)
+      snap.servable(snap.slice("positions", terms, nBuckets)), queries, k)
   }
 
   /** The rescore half of the proximity serve: `cand` is
@@ -1278,30 +1311,41 @@ object Retrieval {
     * "exhaustive") so specs can assert the degenerate-regime switch
     * actually takes the fallback. */
   private[graft] def maxScoreIndexedPlan(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       dir: String, queries: DataFrame, k: Int, nBuckets: Int,
       k1: Double, b: Double, maxCandidatePostings: Long)
       : (String, DataFrame) = {
     import spark.implicits._
-    val qrows = queries.select(col("query_id").cast("long"), col("term"))
-      .as[(Long, String)].collect()           // bounded: the query set
+    val snap = new Snapshot(spark, dir)
+    val qs = localOf(queries)                // bounded: the query set
+    val qrows = qs.select(col("query_id").cast("long"), col("term"))
+      .as[(Long, String)].collect()
     val qterms = qrows.map(_._2).distinct.toSeq
-    val stats = readStats(spark, dir)
-    val st = stats.select(col("n_docs").cast("long")).head()
-    val nDocs = st.getLong(0)
+    val stats = snap.bm25Stats
+    val nDocs = snap.stats.head().getLong(0)
+    // dictionary slice: pruned, vocab-of-query-terms sized. Collected
+    // once, it is both the df map of the planning below and, as a
+    // LocalRelation, the broadcast side of every slice this serve
+    // reads — no second dictionary read.
+    val dict = localOf(snap.slice("terms", qterms, nBuckets)
+      .select(col("term"), col("df").cast("long")))
+    val dfMap = dict.as[(String, Long)].collect().toMap
+    def servable(ts: Seq[String]): DataFrame =
+      snap.servable(snap.withDf(ts, nBuckets, dict))
     def exhaustive: DataFrame =
-      rank(readServableSlice(spark, dir, qterms, nBuckets)
-        .join(broadcast(queries), "term").crossJoin(broadcast(stats)),
+      rank(servable(qterms)
+        .join(broadcast(qs), "term").crossJoin(broadcast(stats)),
         k, k1, b)
-    // dictionary slice: pruned, vocab-of-query-terms sized
-    val dfMap = prunedRead(spark, dir, "terms", qterms, nBuckets)
-      .select(col("term"), col("df").cast("long"))
-      .as[(String, Long)].collect().toMap
     def ubOf(t: String): Double =
       math.log(1.0 + (nDocs - dfMap(t) + 0.5) / (dfMap(t) + 0.5)) *
         (k1 + 1.0) + 1e-9
-    val byQ = qrows.filter(r => dfMap.contains(r._2)).distinct
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.toSeq).toMap
+    // per query, its indexed terms WITH their multiplicity: a term
+    // the query repeats scores once per occurrence (the batch scorer
+    // joins every query row), so its bound must count as often — the
+    // batch planning's per-row termBounds. Deduplicated, a doc
+    // matching only a repeated term could score above θ yet be pruned.
+    val byQ = qrows.filter(r => dfMap.contains(r._2))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     if (byQ.isEmpty) return ("exhaustive", exhaustive)
     // θ per query from the highest-ub (driver) term's list only —
     // ties break to the lexicographically smallest term, matching
@@ -1310,8 +1354,7 @@ object Retrieval {
       byQ.view.mapValues(ts => ts.minBy(t => (-ubOf(t), t))).toMap
     val dq = driverTerm.toSeq.toDF("query_id", "term")
     val thetaMap = contrib(
-        readServableSlice(spark, dir, driverTerm.values.toSeq.distinct,
-          nBuckets)
+        servable(driverTerm.values.toSeq.distinct)
           .join(broadcast(dq), "term").crossJoin(broadcast(stats)),
         k1, b)
       .select(col("query_id"), col("doc_id"),
@@ -1343,19 +1386,16 @@ object Retrieval {
     val essentialDf = essential.iterator.map { case (_, t) => dfMap(t) }.sum
     if (essentialDf > maxCandidatePostings)
       return ("exhaustive", exhaustive)
-    val candidates =
-      readServableSlice(spark, dir, essential.map(_._2).distinct,
-          nBuckets)
-        .join(broadcast(essential.toDF("query_id", "term")),
-          Seq("term"))
-        .select("query_id", "doc_id").distinct()
+    val candidates = servable(essential.map(_._2).distinct)
+      .join(broadcast(essential.toDF("query_id", "term")), Seq("term"))
+      .select("query_id", "doc_id").distinct()
     // candidate-side assembly — the maxScorePlan shape: the one
     // corpus-sized scan is probed by a broadcast hash join on doc_id;
     // the full query-join never materializes.
     ("maxscore", rank(
-      readServableSlice(spark, dir, qterms, nBuckets)
+      servable(qterms)
         .join(broadcast(candidates), "doc_id")
-        .join(broadcast(queries), Seq("query_id", "term"))
+        .join(broadcast(qs), Seq("query_id", "term"))
         .crossJoin(broadcast(stats)),
       k, k1, b))
   }
@@ -1370,19 +1410,27 @@ object Retrieval {
     (qslice.count(), scored.count())
   }
 
-  /** `stats` collected to its one row and re-entered as a
-    * LocalRelation (round 20): the batch scorers receive stats as RAW
+  /** `df` collected (with `distinct`, deduplicated on the driver) and
+    * re-entered as a LocalRelation — the w25/w30 discipline. Only
+    * bounded frames come here: a stats row, a query set. Round 20
+    * applied it to `stats`: the batch scorers receive stats as RAW
     * corpus lineage (`corpusStats` — a full tokenize + aggregate),
     * and the multi-JOB paths evaluated it once per job: rm3's
     * feedback collect and final plan each paid it, WAND/MaxScore's
     * termBounds collect, θ job and scoring plan paid it three times
     * (AQE's exchange reuse dedupes identical broadcast subtrees only
     * WITHIN a plan, never across jobs). One bounded collect makes
-    * every later consumer a literal. Values identical: the same
-    * aggregation, evaluated once. */
-  private def statsLocal(stats: DataFrame): DataFrame =
-    stats.sparkSession.createDataFrame(
-      java.util.Arrays.asList(stats.collect(): _*), stats.schema)
+    * every later consumer a literal; a collect over a LocalRelation
+    * runs no job at all. Values identical: the same rows, evaluated
+    * once. */
+  private def localOf(df: DataFrame, distinct: Boolean = false): DataFrame = {
+    val rows = df.collect()
+    local(df.sparkSession, if (distinct) rows.distinct.toSeq else rows.toSeq,
+      df.schema)
+  }
+  private def local(spark: SparkSession, rows: Seq[Row],
+                    schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** The planning state the MaxScore/WAND family shares, computed
     * once per serve over a stored-df slice: per-(query,term) upper
@@ -1407,9 +1455,6 @@ object Retrieval {
                               b: Double)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = slice.sparkSession
-    def local(rows: Array[org.apache.spark.sql.Row],
-              schema: org.apache.spark.sql.types.StructType): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     // All three planning relations are query-set-sized, so they cross
     // the driver as BOUNDED collects and re-enter every consumer as
     // LocalRelations (round 20 — the maxScoreIndexedPlan discipline
@@ -1430,14 +1475,14 @@ object Retrieval {
           (col("df") + lit(0.5))) * lit(k1 + 1.0) + lit(1e-9))
       .select("query_id", "term", "ub")
     val tbRows = tbDf.collect()                // bounded: query terms
-    val termBounds = local(tbRows, tbDf.schema)
+    val termBounds = local(spark, tbRows.toSeq, tbDf.schema)
     val byQ = tbRows.groupBy(_.get(0))         // query_id, any id type
     // θ: per query, the k-th best single-term 6-dp score on the
     // highest-ub (driver) term's list — the one posting-sized
     // planning job, collected to one row per query.
     val driverRows = byQ.values.map(rs =>
-      rs.minBy(r => (-r.getDouble(2), r.getString(1)))).toArray
-    val driverTerm = local(driverRows, tbDf.schema)
+      rs.minBy(r => (-r.getDouble(2), r.getString(1)))).toSeq
+    val driverTerm = local(spark, driverRows, tbDf.schema)
       .select("query_id", "term")
     val thetaDf = contrib(
         slice.join(broadcast(driverTerm), "term")
@@ -1450,7 +1495,7 @@ object Retrieval {
       .filter(col("r") === k)
       .select(col("query_id"), col("partial").as("theta"))
     val thRows = thetaDf.collect()             // bounded: ≤ 1 row/query
-    val theta = local(thRows, thetaDf.schema)
+    val theta = local(spark, thRows.toSeq, thetaDf.schema)
     val thMap = thRows.map(r => r.get(0) -> r.getDouble(1)).toMap
     // essential: ub-ascending running total reaches θ − 1e-6; the
     // fold runs in the exact (ub asc, term asc) order of the old
@@ -1466,8 +1511,8 @@ object Retrieval {
             if (cum >= th - 1e-6) Some(r) else None
           }
       }
-    }.toArray
-    val essential = local(essRows, tbDf.schema)
+    }
+    val essential = local(spark, essRows, tbDf.schema)
       .select("query_id", "term")
     (termBounds, theta, essential)
   }
@@ -1544,7 +1589,7 @@ object Retrieval {
   private def wandPlan(slice: DataFrame, queries: DataFrame,
                        stats0: DataFrame, k: Int, k1: Double, b: Double)
       : (DataFrame, DataFrame, DataFrame) = {
-    val stats = statsLocal(stats0)   // raw lineage would re-run per job
+    val stats = localOf(stats0)   // raw lineage would re-run per job
     val (termBounds, theta, essential) =
       pruningPlanning(slice, queries, stats, k, k1, b)
     val nominees = slice
@@ -1576,7 +1621,7 @@ object Retrieval {
   private def maxScorePlan(slice: DataFrame, queries: DataFrame,
                            stats0: DataFrame, k: Int, k1: Double,
                            b: Double): (DataFrame, DataFrame) = {
-    val stats = statsLocal(stats0)   // raw lineage would re-run per job
+    val stats = localOf(stats0)   // raw lineage would re-run per job
     val qslice = slice.join(broadcast(queries), "term")
       .crossJoin(broadcast(stats))
     val (_, _, essential) =
@@ -1783,28 +1828,11 @@ object Retrieval {
     * value until compaction; scores therefore match a fresh build
     * only after [[compactDeletes]] (the documented Lucene-model
     * staleness). */
-  def readServableSlice(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, terms: Seq[String],
-                        nBuckets: Int): DataFrame =
-    minusTombstones(spark, dir,
-      readIndexSlice(spark, dir, terms, nBuckets))
-
-  /** Tombstone-aware postings slice WITHOUT the term-dictionary join
-    * (round 20): [[readServableSlice]] attaches `df` via an inner
-    * join against the pruned `terms` table, but the QL/SDM scorers
-    * never read `df` — their per-term statistic is cf = Σ tf over
-    * the slice itself — so every slice consumer in those plans paid
-    * a dictionary read + broadcast build for a row-preserving join
-    * (every posting's term is in the dictionary by [[writeIndex]] /
-    * [[appendIndex]] construction; the only state where that could
-    * differ is a crash BETWEEN an append's postings write and its
-    * dictionary swap, which no serve contract covers). Same rows,
-    * minus the `df` column. */
-  def readServablePostings(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, terms: Seq[String],
-                           nBuckets: Int): DataFrame =
-    minusTombstones(spark, dir,
-      prunedRead(spark, dir, "postings", terms, nBuckets))
+  def readServableSlice(spark: SparkSession, dir: String,
+                        terms: Seq[String], nBuckets: Int): DataFrame = {
+    val snap = new Snapshot(spark, dir)
+    snap.servable(snap.indexSlice(terms, nBuckets))
+  }
 
   /** Apply the tombstones: rewrite postings without the deleted docs,
     * rebuild the term dictionary from the survivors, decrement the

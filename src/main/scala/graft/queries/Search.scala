@@ -585,7 +585,7 @@ object Search {
 
   /** Corpus constants (n_docs, avgdl) over the documents table,
     * collected ONCE per (session, dir) and memoized as a 1-row
-    * LocalRelation (round 20 — the statsLocal discipline lifted to
+    * LocalRelation (round 20 — the Retrieval.localOf discipline lifted to
     * the session, the postings-memo amortization applied to the
     * OTHER per-call corpus pass every batch scorer pays). Computed
     * by `Retrieval.corpusStats` over the documents table verbatim —
@@ -791,7 +791,7 @@ object Search {
             "doc_id", "text", tmp, nBuckets = 16)
           val stats = Retrieval.readStats(s, tmp)
           // The round-9 serve-ceiling fix (VERDICT r09 #2), mirroring
-          // w25's static-side discipline: the per-batch prunedRead
+          // w25's static-side discipline: the per-batch pruned read
           // re-listed + re-read parquet every micro-batch, a serve-
           // path constant ~20x off the vector path. The static side
           // is now the cached FORWARD INDEX (impactDocMap: per-(term,
@@ -1519,7 +1519,7 @@ object Search {
         "stores the positions stream (doc_id, term, pos) under the " +
         "same term-bucket partitioning as the postings, and serving " +
         "reads ONLY the phrase terms' buckets (file-level partition " +
-        "pruning, the prunedRead discipline) — the corpus is never " +
+        "pruning, the pruned-read discipline) — the corpus is never " +
         "re-tokenized at query time. phraseOccurrences consumes the " +
         "slice directly (the positional intersection only touches " +
         "phrase-term rows, so the slice loses nothing — oracle is " +
@@ -1544,8 +1544,8 @@ object Search {
       "Phrase serving of a post-delete, PRE-compaction positional " +
         "index — the r18 verdict #1 window closed: deleteDocs " +
         "writes only tombstones, and readPositionsSlice (like " +
-        "readServableSlice — they now share the minusTombstones " +
-        "gate) anti-joins them out immediately, so a phrase serve " +
+        "readServableSlice — they share the index snapshot's " +
+        "tombstone gate) anti-joins them out immediately, so a phrase serve " +
         "between delete and compaction behaves as if the deleted " +
         "docs were never indexed. Phrase matching uses no df or " +
         "corpus stats, so unlike d90's BM25 there is NO stale-stats " +

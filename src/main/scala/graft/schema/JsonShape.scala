@@ -35,13 +35,21 @@ object JsonShape {
   private def read(p: JsonParser, t: JsonToken, typed: Boolean): JType = t match {
     case JsonToken.START_OBJECT =>
       val fields = Vector.newBuilder[(String, JType)]
+      // 64-bit filter over the names' hashes: a bit seen twice means a
+      // key MAY repeat, and only then is the object checked exactly
+      var seen = 0L
+      var maybeRepeat = false
       var tok = p.nextToken()
       while (tok != JsonToken.END_OBJECT) {
         val name = p.currentName()
+        val bit = 1L << (name.hashCode & 63)
+        maybeRepeat |= (seen & bit) != 0
+        seen |= bit
         fields += name -> read(p, p.nextToken(), typed)
         tok = p.nextToken()
       }
-      JStruct(fields.result())
+      val fs = fields.result()
+      JStruct(if (maybeRepeat) oneFieldPerKey(fs, typed) else fs)
     case JsonToken.START_ARRAY =>
       // Merge ALL element shapes (sane divergence from the reference's
       // head-only array handling, CreateHQL.scala:55 — see SURVEY.md §1.2).
@@ -58,6 +66,35 @@ object JsonShape {
     case JsonToken.VALUE_NUMBER_FLOAT => if (typed) JDouble else JStr
     case JsonToken.VALUE_TRUE | JsonToken.VALUE_FALSE => if (typed) JBool else JStr
     case other => throw new IllegalStateException(s"unexpected token $other")
+  }
+
+  /** One field per key, at the key's first position, shaped as the
+    * [[JType.merge]] of every value it carried — so the table reads
+    * any of them. A repeated key inside one object (`{"a":1,"a":2}`)
+    * would otherwise become two same-named columns, which the Hive
+    * CREATE rejects (`COLUMN_ALREADY_EXISTS`). Allocates nothing
+    * unless a key really repeats. */
+  private def oneFieldPerKey(fs: Vector[(String, JType)],
+                             typed: Boolean): Vector[(String, JType)] = {
+    var repeat = false
+    var i = 1
+    while (!repeat && i < fs.length) {
+      val k = fs(i)._1
+      var j = 0
+      while (!repeat && j < i) {
+        val o = fs(j)._1
+        repeat = o.hashCode == k.hashCode && o == k
+        j += 1
+      }
+      i += 1
+    }
+    if (!repeat) fs
+    else {
+      val merged = scala.collection.mutable.LinkedHashMap.empty[String, JType]
+      fs.foreach { case (k, v) =>
+        merged(k) = merged.get(k).fold(v)(JType.merge(_, v, typed)) }
+      merged.toVector
+    }
   }
 
   /** Shape for inference over NDJSON rows: a record whose top level is not

@@ -1051,4 +1051,187 @@ class RetrievalSpec extends AnyFunSpec {
       }
     }
   }
+
+  describe("Retrieval indexed serves — per-call snapshot, driver-side planning") {
+    type Out = List[(Long, Long, Long, Double)]
+    def out(df: org.apache.spark.sql.DataFrame): Out =
+      df.as[(Long, Long, Long, Double)].collect().toList.sorted
+    def withDir[A](f: String => A): A = {
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft-snap").toString
+      try f(tmp) finally graft.queries.Rm.rf(tmp)
+    }
+
+    it("writeIndex into a directory that does not exist builds the " +
+       "index, and serving from it equals the batch scorer") {
+      withDir { tmp =>
+        val dir = s"$tmp/no/such/dir/index"
+        Retrieval.writeIndex(corpus, "doc_id", "text", dir, nBuckets = 8)
+        val q = Seq((1L, "joins"), (1L, "data"), (2L, "shuffle"))
+          .toDF("query_id", "term")
+        val got = out(Retrieval.maxScoreIndexedTopK(spark, dir, q, k = 3,
+          nBuckets = 8))
+        val want = out(Retrieval.bm25TopK(
+          Retrieval.postings(corpus, "doc_id", "text"), q,
+          Retrieval.corpusStats(corpus, "text"), k = 3))
+        assert(got == want && got.nonEmpty)
+      }
+    }
+
+    it("compactPostings keeps a STRING doc_id index servable: two " +
+       "appends, compact, and the serve after equals the serve before") {
+      withDir { dir =>
+        val docs = zipf2(nDocs = 90, vocab = 20, seed = 41)
+          .select(concat(lit("d"), col("doc_id")).as("doc_id"),
+            col("doc_id").as("n"), col("text"))
+        def wave(w: Int) = docs.filter(col("n") >= w * 30 &&
+          col("n") < (w + 1) * 30).drop("n")
+        Retrieval.writeIndex(wave(0), "doc_id", "text", dir, nBuckets = 4)
+        Retrieval.appendIndex(wave(1), "doc_id", "text", dir, nBuckets = 4)
+        Retrieval.appendIndex(wave(2), "doc_id", "text", dir, nBuckets = 4)
+        val q = Seq((1L, "w1"), (1L, "w7"), (2L, "w3"), (2L, "w11"))
+          .toDF("query_id", "term")
+        def serve(): Seq[Seq[String]] = Seq(
+          Retrieval.maxScoreIndexedTopK(spark, dir, q, k = 5, nBuckets = 4),
+          Retrieval.qlDirichletIndexedTopK(spark, dir, q, k = 5,
+            nBuckets = 4))
+          .map(_.collect().map(_.mkString(",")).toSeq.sorted)
+        val before = serve()
+        assert(Retrieval.compactPostings(spark, dir).nonEmpty,
+          "two appends should have fragmented a bucket")
+        val after = serve()
+        assert(after == before && before.forall(_.nonEmpty))
+      }
+    }
+
+    it("each indexed serve (bm25 MaxScore, QL, SDM) equals its batch " +
+       "form on random corpora, across duplicate query terms, " +
+       "single-term queries, one term at adjacent qpos and a query " +
+       "with no indexed term") {
+      for (seed <- 1 to 3) withDir { dir =>
+        val rnd = new scala.util.Random(seed * 101L)
+        val vocab = 12 + rnd.nextInt(12)
+        val docs = zipf2(nDocs = 50 + rnd.nextInt(40), vocab = vocab,
+          seed = seed + 300)
+        Retrieval.writeIndex(docs, "doc_id", "text", dir, nBuckets = 8,
+          withPositions = true)
+        def w() = s"w${1 + rnd.nextInt(vocab)}"
+        val seqs: Seq[Seq[String]] = Seq(
+          Seq(w(), w(), w()),                    // random, may repeat
+          Seq(w()),                              // single term
+          { val t = w(); Seq(t, w(), t) },       // duplicate term
+          { val t = w(); Seq(t, t) },            // one term, adjacent qpos
+          Seq("absent_term"),                    // no indexed term
+          Seq(w(), "absent_term", w()))
+        val q = seqs.zipWithIndex.flatMap { case (ts, qi) =>
+          ts.zipWithIndex.map { case (t, pos) => (qi.toLong, pos.toLong, t) }
+        }.toDF("query_id", "qpos", "term")
+        val qt = q.select("query_id", "term")
+        val posts = Retrieval.postings(docs, "doc_id", "text")
+          .localCheckpoint()
+        val k = 1 + rnd.nextInt(6)
+        val pairs = Seq(
+          "bm25" -> (Retrieval.maxScoreIndexedTopK(spark, dir, qt, k,
+              nBuckets = 8),
+            Retrieval.bm25TopK(posts, qt,
+              Retrieval.corpusStats(docs, "text"), k)),
+          "ql" -> (Retrieval.qlDirichletIndexedTopK(spark, dir, qt, k,
+              nBuckets = 8),
+            Retrieval.qlDirichletTopK(posts, qt, k)),
+          "sdm" -> (Retrieval.sdmIndexedTopK(spark, dir, q, k,
+              nBuckets = 8),
+            Retrieval.sdmTopK(posts,
+              Retrieval.positionalPostings(docs, "doc_id", "text")
+                .localCheckpoint(), q, k)))
+        pairs.foreach { case (name, (indexed, batch)) =>
+          val (got, want) = (out(indexed), out(batch))
+          assert(got == want && got.nonEmpty,
+            s"seed $seed k=$k: $name indexed serve differs from its batch form")
+        }
+      }
+    }
+
+    it("MaxScore's indexed plan counts a repeated query term once per " +
+       "occurrence in its bounds: a doc matching only the repeated " +
+       "term outscores θ and must not be pruned") {
+      withDir { dir =>
+        // c (df 5) is non-essential by its single bound (2.95 < θ =
+        // 3.87, the best r-only score) but doc 2 scores 2·contrib(c)
+        // = 4.97 on the query (c, c, r) and ranks first
+        val docs = (Seq("r r r r r", "r x1 x2 x3 x4 x5", "c c c c c c c c") ++
+          (0 until 4).map(j => s"c y${j}a y${j}b y${j}c y${j}d y${j}e") ++
+          (7 until 20).map(i => (0 until 6).map(j => s"f${i}_$j").mkString(" ")))
+          .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+          .toDF("doc_id", "text")
+        Retrieval.writeIndex(docs, "doc_id", "text", dir, nBuckets = 4)
+        val q = Seq((1L, "c"), (1L, "c"), (1L, "r")).toDF("query_id", "term")
+        val (path, plan) = Retrieval.maxScoreIndexedPlan(spark, dir, q,
+          k = 1, nBuckets = 4, k1 = 1.2, b = 0.75,
+          maxCandidatePostings = 1L << 20)
+        val want = out(Retrieval.bm25TopK(
+          Retrieval.postings(docs, "doc_id", "text"), q,
+          Retrieval.corpusStats(docs, "text"), k = 1))
+        assert(want.map(_._3) == List(2L))
+        assert(path == "maxscore" && out(plan) == want)
+      }
+    }
+
+    it("a warm serve stays within its job budget (schema inference " +
+       "once per table, one stats read, query-set planning on the " +
+       "driver)") {
+      withDir { dir =>
+        val docs = zipf2(nDocs = 80, vocab = 20, seed = 57)
+        Retrieval.writeIndex(docs, "doc_id", "text", dir, nBuckets = 8,
+          withPositions = true)
+        val q = Seq((1L, 0L, "w2"), (1L, 1L, "w9"), (2L, 0L, "w4"),
+          (2L, 1L, "w5"), (2L, 2L, "w13"))
+          .toDF("query_id", "qpos", "term")
+        val qt = q.select("query_id", "term")
+        val serves = Seq(
+          "bm25" -> (() => Retrieval.maxScoreIndexedTopK(spark, dir, qt,
+            k = 5, nBuckets = 8)),
+          "ql" -> (() => Retrieval.qlDirichletIndexedTopK(spark, dir, qt,
+            k = 5, nBuckets = 8)),
+          "sdm" -> (() => Retrieval.sdmIndexedTopK(spark, dir, q, k = 5,
+            nBuckets = 8)))
+        // every Spark job of the serve, counted by job group; a fence
+        // job's start proves every earlier event has been delivered
+        // (the listener bus is ordered)
+        val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            groups.add(String.valueOf(
+              e.properties.getProperty("spark.jobGroup.id")))
+        }
+        val sc = spark.sparkContext
+        def jobs(group: String)(run: => Unit): Int = {
+          sc.setJobGroup(group, group)
+          try run finally sc.clearJobGroup()
+          sc.setJobGroup(s"$group-fence", "fence")
+          try spark.range(1).count() finally sc.clearJobGroup()
+          val deadline = System.nanoTime() + 30L * 1000000000L
+          while (!groups.contains(s"$group-fence") &&
+              System.nanoTime() < deadline) Thread.sleep(10)
+          assert(groups.contains(s"$group-fence"), "fence job never seen")
+          groups.toArray.count(_ == group)
+        }
+        sc.addSparkListener(listener)
+        try {
+          val counts = serves.map { case (name, serve) =>
+            serve().collect()                    // cold: warm the JVM
+            name -> jobs(s"budget-$name")(serve().collect())
+          }.toMap
+          info(s"warm serve jobs: $counts")
+          // measured on this fixture; before the snapshot and the
+          // driver-side planning these serves ran 25 / 15 / 40 jobs
+          val budget = Map("bm25" -> 18, "ql" -> 12, "sdm" -> 31)
+          budget.foreach { case (name, max) =>
+            assert(counts(name) <= max,
+              s"$name serve launched ${counts(name)} jobs (budget $max)")
+          }
+        } finally sc.removeSparkListener(listener)
+      }
+    }
+  }
 }

@@ -120,4 +120,27 @@ class DdlSpec extends AnyFunSpec {
       spark.sql("DROP TABLE graft_ddl_spec")
     }
   }
+
+  describe("a key repeated inside one JSON object") {
+    it("infers one column, and Ddl.createStatement + CREATE succeed in HiveMode") {
+      val spark = graft.TestSpark.spark
+      import spark.implicits._
+      val st = graft.sources.JsonIngest.inferRoutedStats(
+        Seq("""{"a":1,"a":2}""").toDF("value"), "value")
+      val schema = st.schema.getOrElse(fail("no schema inferred"))
+      assert(schema.fieldNames.toSeq == Seq("a"))
+      assert((st.nValid, st.nInvalid) == (1L, 0L))
+      val hs = graft.catalog.HiveMode.session(spark)
+      val dir = java.nio.file.Files.createTempDirectory("graft-dupkey").toString
+      try {
+        hs.sql("DROP TABLE IF EXISTS graft_dupkey_spec")
+        hs.sql(Ddl.createStatement(schema, "graft_dupkey_spec", dir,
+          classOf[graft.hive.JsonLineSerDe].getName))
+        assert(hs.table("graft_dupkey_spec").schema.fieldNames.toSeq == Seq("a"))
+      } finally {
+        hs.sql("DROP TABLE IF EXISTS graft_dupkey_spec")
+        graft.queries.Rm.rf(dir)
+      }
+    }
+  }
 }

@@ -30,6 +30,20 @@ class JsonShapeSpec extends AnyFunSpec {
       assert(JsonShape.of("", typed = false).isEmpty)
       assert(JsonShape.of(null, typed = false).isEmpty)
     }
+    it("keeps one field per repeated key, shaped as the merge of its values") {
+      assert(JsonShape.of("""{"a": 1, "b": 2, "a": 2}""", typed = false) ==
+        Some(JStruct(Vector("a" -> JStr, "b" -> JStr))))
+      assert(JsonShape.of("""{"a": 1, "a": 2.5}""", typed = true) ==
+        Some(JStruct(Vector("a" -> JDouble))))
+      assert(JsonShape.of("""{"s": {"x": 1}, "a": null, "s": {"y": true}, "a": [1]}""",
+          typed = true) ==
+        Some(JStruct(Vector(
+          "s" -> JStruct(Vector("x" -> JLong, "y" -> JBool)),
+          "a" -> JArr(JLong)))))
+      // the nested object's keys are checked on their own
+      assert(JsonShape.of("""{"o": {"k": 1, "k": "v"}}""", typed = true) ==
+        Some(JStruct(Vector("o" -> JStruct(Vector("k" -> JStr))))))
+    }
     it("treats an empty array as ARRAY<STRING> evidence") {
       assert(JsonShape.of("""{"a": []}""", typed = false) ==
         Some(JStruct(Vector("a" -> JArr(JNull)))))
